@@ -4,7 +4,8 @@ Python/pandas UDFs only where semantics require them)."""
 from ensembl_database_loader_spark.functions.checksums import (
     bsd_sum16,
     bsd_sum16_blocks,
+    bsd_sum16_files,
     bsd_sum16_udf,
 )
 
-__all__ = ["bsd_sum16", "bsd_sum16_blocks", "bsd_sum16_udf"]
+__all__ = ["bsd_sum16", "bsd_sum16_blocks", "bsd_sum16_files", "bsd_sum16_udf"]

@@ -16,7 +16,8 @@ Operator parity (SURVEY.md §2.1):
 - X1  fan-out, randomized order  (LoadDBs_conf.pm:113-122)
 - P1  priority_score             (Prioritise.pm:32-68)
 - P2  priority_branch routing    (Prioritise.pm:70-81; LoadDBs_conf.pm:139-144)
-- D3  checksum verify            (sources.mysql_dump.verify_checksums)
+- D3  checksum verify            (sources.mysql_dump.verify_checksums: the
+                                  system `sum`, in the per-database thread)
 - L1-L6 load                     (sources.mysql_dump + the sink)
 - A1-A4 summary aggregation      (EmailSummary.pm:88-176)
 

@@ -16,13 +16,14 @@ Spark-first design decisions:
   zero-dates (``0000-00-00 ...``) mapped to NULL — a direct timestamp
   read would null entire rows on the first zero-date (univocity treats
   the row as malformed).
-- CHECKSUMS verification is the reference's join-compare (parse
-  manifest DownloadDatabase.pm:188-216; compare 148-170) expressed as
-  a full-outer join of two one-row-per-file manifests, with the BSD
-  ``sum`` 16-bit checksum (DownloadDatabase.pm:238-251) computed by an
-  Arrow-batched UDF on executors. At local scale the file list comes
-  from os.scandir; on a real cluster the same join runs over a
-  ``binaryFile`` read of the shared store.
+- CHECKSUMS verification is the reference's compare (parse manifest
+  DownloadDatabase.pm:188-216; compare 148-170) in plain Python over a
+  one-row-per-file manifest. The BSD ``sum`` checksums come from the
+  system ``sum``, run once per database in the calling per-database
+  thread on the host that reads the dump directory — as the reference
+  runs ``sum`` on the worker holding the files (DownloadDatabase.pm:
+  238-251). No Spark job is started: the file bytes never leave the
+  host that already lists the directory and gunzips its DDL.
 """
 
 from __future__ import annotations
@@ -36,7 +37,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DateType, StringType, StructField, StructType, TimestampType
 
-from ensembl_database_loader_spark.functions.checksums import bsd_sum16_file_check_udf
+from ensembl_database_loader_spark.functions.checksums import (
+    ChecksumToolError,
+    bsd_sum16_files,
+)
 from ensembl_database_loader_spark.sources.mysql_ddl import DumpSchema, parse_mysql_ddl
 
 #: Part-grouping regex — the reference's, verbatim (LoadFiles.pm:203):
@@ -123,45 +127,41 @@ def parse_checksum_manifest(path: str) -> list[tuple[str, int, int]]:
 def verify_checksums(
     spark: SparkSession, dump: DumpDirectory, raise_on_failure: bool = True
 ) -> DataFrame:
-    """Join-compare the CHECKSUMS manifest against recomputed BSD sums.
+    """Compare the CHECKSUMS manifest against the system ``sum``.
 
-    Returns a DataFrame (file, expected, actual) of FAILURES (empty =
-    verified). Missing files surface as actual='-' exactly like the
-    reference (DownloadDatabase.pm:157); extra on-disk files not in the
-    manifest are ignored (the manifest drives the check). Like the
-    reference, the compared value is the combined ``'%05d sum' blocks``
-    pair (DownloadDatabase.pm:208-210, 247-250) — a truncated or
-    resized file fails on the block count even if the 16-bit sum
-    collides."""
+    Returns a DataFrame (file, expected, actual) of FAILURES in manifest
+    order (empty = verified), built from local rows, so the call starts
+    no Spark job. Missing files surface as actual='-' exactly like the
+    reference (DownloadDatabase.pm:157); so do manifest entries naming
+    ``CHECKSUMS*``, dotfiles or anything that is not a regular file.
+    Extra on-disk files not in the manifest are ignored (the manifest
+    drives the check). Like the reference, the compared value is the
+    combined ``'%05d sum' blocks`` pair (DownloadDatabase.pm:208-210,
+    247-250) — a truncated or resized file fails on the block count
+    even if the 16-bit sum collides. If ``sum`` is missing or fails,
+    raises ChecksumToolError naming the database: never a pass."""
     if dump.checksum_file is None:
         raise FileNotFoundError(f"{dump.path}: no CHECKSUMS manifest")
     manifest = parse_checksum_manifest(dump.checksum_file)
-    expected = spark.createDataFrame(
-        [(f, f"{s:05d} {blocks}") for f, s, blocks in manifest],
-        "file string, expected string",
-    )
-    local = [
+    local = {
         e.name
         for e in os.scandir(dump.path)
         if e.is_file() and not e.name.startswith(("CHECKSUMS", "."))
-    ]
-    actual = spark.createDataFrame(
-        [(f, os.path.join(dump.path, f)) for f in local] or [],
-        "file string, path string",
-    ).select(
-        "file",
-        bsd_sum16_file_check_udf(F.col("path")).alias("actual"),
-    )
-    failures = (
-        expected.join(actual, "file", "left_outer")
-        .select("file", "expected", F.coalesce("actual", F.lit("-")).alias("actual"))
-        .filter(F.col("expected") != F.col("actual"))
-    )
-    if raise_on_failure:
-        rows = failures.collect()
-        if rows:
-            raise ChecksumError(dump.name, [(r.file, r.expected, r.actual) for r in rows])
-    return failures
+    }
+    names = [f for f, _, _ in manifest if f in local]
+    try:
+        sums = bsd_sum16_files(names, cwd=dump.path)
+    except ChecksumToolError as exc:
+        raise ChecksumToolError(f"checksum verification of {dump.name}: {exc}") from exc
+    failures = []
+    for f, s, blocks in manifest:
+        expected = f"{s:05d} {blocks}"
+        actual = f"{sums[f][0]:05d} {sums[f][1]}" if f in sums else "-"
+        if actual != expected:
+            failures.append((f, expected, actual))
+    if raise_on_failure and failures:
+        raise ChecksumError(dump.name, failures)
+    return spark.createDataFrame(failures, "file string, expected string, actual string")
 
 
 def _read_schema(table_schema: StructType) -> tuple[StructType, list[str]]:

@@ -38,28 +38,24 @@ def test_blocks():
 
 
 def test_chunked_file_stream_matches_whole(tmp_path):
-    """bsd_sum16_file streams in 1 MiB chunks; the resumable fold must
-    equal the single-pass result across a chunk boundary, and the block
-    count must match the whole-buffer variant."""
-    from ensembl_database_loader_spark.functions.checksums import (
-        _CHUNK,
-        bsd_sum16_file,
-    )
+    """A file over 1 MiB checksummed by the system ``sum`` must equal
+    the single-pass fold, sum and block count."""
+    from ensembl_database_loader_spark.functions.checksums import bsd_sum16_files
 
-    data = bytes(range(256)) * ((_CHUNK + 4096) // 256)  # > one chunk
+    data = bytes(range(256)) * (((1 << 20) + 4096) // 256)  # > 1 MiB
     p = tmp_path / "blob.bin"
     p.write_bytes(data)
-    assert bsd_sum16_file(str(p)) == bsd_sum16_blocks(data)
+    assert bsd_sum16_files([str(p)])[str(p)] == bsd_sum16_blocks(data)
 
 
 def test_check_string_format(tmp_path):
     """The reference-format combined string: '%05d sum' + ' ' + blocks
     (DownloadDatabase.pm:247-250)."""
-    from ensembl_database_loader_spark.functions.checksums import bsd_sum16_file
+    from ensembl_database_loader_spark.functions.checksums import bsd_sum16_files
 
     p = tmp_path / "f.bin"
     p.write_bytes(b"\x01\x02")
-    s, blocks = bsd_sum16_file(str(p))
+    s, blocks = bsd_sum16_files([str(p)])[str(p)]
     assert (s, blocks) == (0x8002, 1)
     assert f"{s:05d} {blocks}" == "32770 1"
 

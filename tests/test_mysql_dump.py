@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import gzip
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -256,6 +257,152 @@ def test_truncation_with_colliding_sum16_fails(spark, tmp_path):
     with pytest.raises(ChecksumError) as ei:
         verify_checksums(spark, scan_dump_dir(d))
     assert any(f == "t.txt.gz" for f, _, _ in ei.value.failures)
+
+
+# --- checksum verify: the system `sum` in the calling thread --------------
+
+
+def test_excluded_manifest_entries_report_dash(spark, tmp_path):
+    """Manifest entries naming CHECKSUMS*, a dotfile or a subdirectory
+    report '-' even though something by that name exists on disk."""
+    d = build_dump(str(tmp_path), "excl_db_1_1")
+    with open(os.path.join(d, "CHECKSUMS"), "a") as f:
+        for fn in ("CHECKSUMS", "CHECKSUMS.gz", ".hidden", "sub"):
+            f.write(f"00001     1 {fn}\n")
+    with open(os.path.join(d, "CHECKSUMS.gz"), "wb") as f:
+        f.write(gzip.compress(b""))
+    with open(os.path.join(d, ".hidden"), "wb") as f:
+        f.write(b"x")
+    os.makedirs(os.path.join(d, "sub"))
+    dump = scan_dump_dir(d)
+    assert dump.checksum_file.endswith("CHECKSUMS")
+    with pytest.raises(ChecksumError) as ei:
+        verify_checksums(spark, dump)
+    assert ei.value.failures == [
+        (fn, "00001 1", "-") for fn in ("CHECKSUMS", "CHECKSUMS.gz", ".hidden", "sub")
+    ]
+
+
+def test_files_absent_from_manifest_are_ignored(spark, tmp_path):
+    d = build_dump(str(tmp_path), "extra_db_1_1")
+    with open(os.path.join(d, "extra.txt.gz"), "wb") as f:
+        f.write(b"not in the manifest")
+    with open(os.path.join(d, "-x"), "wb") as f:
+        f.write(b"nor this")
+    verify_checksums(spark, scan_dump_dir(d))  # no ChecksumError
+
+
+def test_space_and_dash_file_names_checksum(spark, tmp_path):
+    """A name with a space (PART_RE allows it) and a name starting with
+    '-' checksum correctly, passing and failing."""
+    d = build_dump(str(tmp_path), "odd_db_1_1")
+    files = {"my table.txt.gz": gzip.compress(b"1\n2\n"), "-dash.txt.gz": gzip.compress(b"3\n")}
+    with open(os.path.join(d, "CHECKSUMS"), "a") as f:
+        for fn, data in files.items():
+            with open(os.path.join(d, fn), "wb") as g:
+                g.write(data)
+            s, blocks = bsd_sum16_blocks(data)
+            f.write(f"{s:05d} {blocks:5d} {fn}\n")
+    dump = scan_dump_dir(d)
+    assert dump.files_by_table["my table"] == ["my table.txt.gz"]
+    verify_checksums(spark, dump)
+    for fn in files:
+        with open(os.path.join(d, fn), "ab") as f:
+            f.write(b"!")
+    with pytest.raises(ChecksumError) as ei:
+        verify_checksums(spark, dump)
+    got = {f: a for f, _, a in ei.value.failures}
+    for fn, data in files.items():
+        s, blocks = bsd_sum16_blocks(data + b"!")
+        assert got[fn] == f"{s:05d} {blocks}"
+
+
+def test_non_raising_verify_returns_the_raised_failures(spark, tmp_path):
+    d = build_dump(str(tmp_path), "nr_db_1_1")
+    os.remove(os.path.join(d, "orders.0002.txt.gz"))
+    with open(os.path.join(d, "region.txt.gz"), "ab") as f:
+        f.write(b"corruption")
+    dump = scan_dump_dir(d)
+    with pytest.raises(ChecksumError) as ei:
+        verify_checksums(spark, dump)
+    df = verify_checksums(spark, dump, raise_on_failure=False)
+    assert df.columns == ["file", "expected", "actual"]
+    assert [tuple(r) for r in df.collect()] == ei.value.failures
+    assert len(ei.value.failures) == 2
+
+
+def test_verify_starts_no_spark_job(spark, tmp_path):
+    """Regression guard: verify runs the system `sum` in the calling
+    thread, with no Spark job, on a passing and on a corrupt dump."""
+    from ensembl_database_loader_spark.functions.checksums import bsd_sum16_files
+
+    sc = spark.sparkContext
+    good = build_dump(str(tmp_path), "nojob_good_1_1")
+    bad = build_dump(str(tmp_path), "nojob_bad_1_1")
+    with open(os.path.join(bad, "region.txt.gz"), "ab") as f:
+        f.write(b"corruption")
+    try:
+        sc.setJobGroup("verify-no-job", "verify_checksums")
+        verify_checksums(spark, scan_dump_dir(good))
+        with pytest.raises(ChecksumError):
+            verify_checksums(spark, scan_dump_dir(bad))
+        bad_df = verify_checksums(spark, scan_dump_dir(bad), raise_on_failure=False)
+        # Control: a job in a later group shows up, so the status store
+        # has seen every job the calls above could have started.
+        sc.setJobGroup("verify-control", "control")
+        assert bad_df.count() == 1
+        deadline = time.monotonic() + 30
+        while not sc.statusTracker().getJobIdsForGroup("verify-control"):
+            assert time.monotonic() < deadline, "control job never recorded"
+            time.sleep(0.05)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("verify-no-job") == []
+
+    sizes = (0, 1, 1023, 1024, 1025, (1 << 20) + 4096)
+    blobs = {f"f{n}.bin": bytes((i * 7 + n) % 256 for i in range(n)) for n in sizes}
+    for fn, data in blobs.items():
+        (tmp_path / fn).write_bytes(data)
+    got = bsd_sum16_files(list(blobs), cwd=str(tmp_path))
+    assert got == {fn: bsd_sum16_blocks(data) for fn, data in blobs.items()}
+
+
+def _path_with(tmp_path, script: str | None) -> str:
+    """A PATH holding only a stand-in ``sum`` (or none at all)."""
+    bin_dir = tmp_path / "bin"
+    bin_dir.mkdir()
+    if script is not None:
+        tool = bin_dir / "sum"
+        tool.write_text(script)
+        tool.chmod(0o755)
+    return str(bin_dir)
+
+
+@pytest.mark.parametrize(
+    "script, reason",
+    [(None, "not found on PATH"), ("#!/bin/sh\necho broken >&2\nexit 3\n", "exited 3")],
+)
+def test_verify_without_working_sum_fails_loudly(spark, tmp_path, monkeypatch, script, reason):
+    """No silent fallback: a missing or failing `sum` raises an error
+    naming the tool and the database, and mirror() records the database
+    as FAILED at verify."""
+    from ensembl_database_loader_spark.functions.checksums import ChecksumToolError
+    from ensembl_database_loader_spark.pipeline.mirror import mirror
+
+    work = tmp_path / "work"
+    os.makedirs(work)
+    d = build_dump(str(work), "nosum_core_1_1")
+    monkeypatch.setenv("PATH", _path_with(tmp_path, script))
+    with pytest.raises(ChecksumToolError) as ei:
+        verify_checksums(spark, scan_dump_dir(d))
+    msg = str(ei.value)
+    assert "`sum" in msg and "nosum_core_1_1" in msg and reason in msg
+    report = mirror(spark, str(work), str(tmp_path / "target"), failed_tolerance=1.0, max_retry=0)
+    [r] = [r for r in report.results if r.status == "FAILED"]
+    assert (r.database, r.analysis) == ("nosum_core_1_1", "verify")
+    assert "`sum" in r.error and reason in r.error
+    assert not os.path.exists(tmp_path / "target" / "nosum_core_1_1")
 
 
 def test_conditional_comment_views_detected():
